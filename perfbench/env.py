@@ -9,6 +9,10 @@ in the package changes.
 - ``SPARK_GRAFT_CPUS`` is the number of CPUs this process may use.
 - ``SPARK_GRAFT_DRIVER_MEM`` stays well below host RAM (the package
   default is 48g).
+- ``MALLOC_ARENA_MAX`` caps glibc's per-thread malloc arenas in the
+  driver JVM, as Hadoop/YARN containers do, so the JVM's native
+  footprint (part of ``peak_rss_mb``) depends less on which of its
+  many threads happened to allocate.
 - Scratch files (Spark local dirs, Python temp files, the JVM temp
   dir) go under ``<checkout>/.bench_tmp``, and the JVMs keep no
   ``hsperfdata`` file, so a run writes only inside its checkout.
@@ -26,6 +30,8 @@ ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 PACKAGE = "loan_default_prediction_app_big_data_spark"
 SCRATCH = os.path.join(ROOT, ".bench_tmp")
 
+#: glibc malloc arenas for the driver JVM and this process.
+MALLOC_ARENAS = 2
 #: Cap on the driver heap. The generated tables are a few MB; a small
 #: heap also keeps the JVM's resident peak, a reported metric, from
 #: wandering with how far the heap happened to grow.
@@ -55,6 +61,7 @@ def configure() -> dict:
         PYTHONPATH=os.pathsep.join(dict.fromkeys(paths)),
         SPARK_GRAFT_CPUS=str(cpus),
         SPARK_GRAFT_DRIVER_MEM=f"{mem_mb}m",
+        MALLOC_ARENA_MAX=str(MALLOC_ARENAS),
         SPARK_LOCAL_DIRS=local,
         TMPDIR=tmp,
         # No /tmp/hsperfdata_* file from the spark-submit launcher JVM.
@@ -69,6 +76,7 @@ def configure() -> dict:
         "pythonpath_root": ROOT,
         "spark_graft_cpus": cpus,
         "spark_graft_driver_mem": f"{mem_mb}m",
+        "malloc_arena_max": MALLOC_ARENAS,
         "host_mem_mb": host_mem_mb(),
     }
 

@@ -1,12 +1,14 @@
 """spark-graft benchmark: one workload, one seed, one closed-loop client.
 
-    python3 perfbench/run.py --workload query_mix --seed 1 --seconds 12 --trace 0
+    python3 perfbench/run.py --workload query_mix --seed 1 --seconds 15 --trace 0
 
 A run generates its input tables from ``--seed`` (off the clock), sets
 the session up several times, checks every query's output against its
-DuckDB oracle once, fits the loan model, runs one untimed warm pass,
-then runs whole passes of ops back to back for ``--seconds``. It prints each metric as
-``name value unit`` and, as its last line, one JSON object
+DuckDB oracle once, fits the loan model, then runs passes of ops back
+to back for ``--seconds``. Each op's latency is the median over its
+repetitions, so a burst of interference on the host moves one sample,
+not the figure. It prints each metric as ``name value unit`` and, as
+its last line, one JSON object
 ``{"correct", "attempted", "failed", "metrics"}``: the end-to-end
 metrics with ``--trace 0``, the per-layer metrics with ``--trace 1``.
 A traced run traces every other pass, so ``trace.overhead`` compares
@@ -28,6 +30,7 @@ import statistics
 import sys
 import time
 import traceback
+from collections import defaultdict
 
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
@@ -35,14 +38,13 @@ import env  # noqa: E402
 
 #: Scale factor of the generated tables.
 SF = 0.01
-#: Sessions set up per run; setup_s is their median.
-SETUPS = 3
-#: Fits per run. The first is cold (MLlib class loading and JIT), so
-#: fit_s is the second; both must give the same model.
-FITS = 2
-#: The op_s_tail percentile. It is fixed rather than "the highest with
-#: ten samples beyond it", which would rise as a faster program fits
-#: more passes into a run and so read as a slower tail.
+#: Sessions set up per run; setup_s is their median. The first
+#: includes the JVM launch, so the median is a session restart.
+SETUPS = 5
+#: The op_s_tail percentile of the median pass. It is fixed rather than
+#: "the highest with ten samples beyond it", which would rise as a
+#: faster program fits more passes into a run and so read as a slower
+#: tail.
 TAIL_PCT = 90.0
 
 END_TO_END_UNITS = {
@@ -111,6 +113,13 @@ def peak_rss_mb(spark) -> tuple[float, float]:
     with open(f"/proc/{jvm_pid}/status") as fh:
         jvm_kb = next(int(line.split()[1]) for line in fh if line.startswith("VmHWM:"))
     return jvm_kb / 1024, resource.getrusage(resource.RUSAGE_SELF).ru_maxrss / 1024
+
+
+def steal_jiffies() -> int:
+    """CPU time the hypervisor gave to other guests while this VM's
+    CPUs wanted to run (``steal`` in /proc/stat), in clock ticks."""
+    with open("/proc/stat") as fh:
+        return int(fh.readline().split()[8])
 
 
 def shutdown(spark) -> None:
@@ -211,13 +220,16 @@ class Run:
         return bad
 
     def fit_model(self):
+        """One untimed cold fit (MLlib class loading and JIT), then the
+        workload's timed fits of the same replica. fit_s is the median
+        of the timed fits; every fit must give the same model."""
         import workloads
         from layers import NULL_PROBE
 
         replica = workloads.write_loan_replica(
             self.spark, os.path.join(self.dir, "loan_replica"), self.wl.loan_replicas, self.args.seed)
         times, models, fit_layers = [], [], {}
-        for _ in range(FITS):
+        for _ in range(1 + self.wl.timed_fits):
             probe = self.tracer.probe() if self.tracer else NULL_PROBE
             t0 = time.perf_counter()
             models.append(workloads.fit(self.spark, replica, probe))
@@ -234,7 +246,7 @@ class Run:
         m = models[0]
         self.record["fit"] = {"seconds": times, "roc_auc": m.roc_auc, "accuracy": m.accuracy,
                               "lbfgs_iterations": len(m.objective_history), "error": self.fit_error}
-        self.fit_s = times[1]
+        self.fit_s = statistics.median(times[1:])
         self.fit_layers = fit_layers
         return m
 
@@ -243,8 +255,7 @@ class Run:
         """Endless passes of (label, run(probe) -> check error or None).
 
         A pass runs every query of the workload once and its scoring
-        requests, in a seeded order, so every run times the same
-        multiset of ops.
+        requests, in a seeded order.
         """
         while True:
             ops = [(name, self._query_run(name)) for name in self.wl.queries]
@@ -282,8 +293,11 @@ class Run:
         return run
 
     def warm(self, ops) -> None:
-        """One untimed pass: the check pass leaves each op one run from
-        cold, and the first timed pass would still be warming up."""
+        """One untimed pass. After the check pass each op has run once,
+        and the JIT is still compiling its hot paths: on query_mix the
+        first timed pass was the slowest in 11 of 13 runs. On
+        build_heavy the per-op median of three repetitions already
+        absorbs it, and its runs have no time to spare."""
         from layers import NULL_PROBE
 
         for label, run in ops:
@@ -291,53 +305,79 @@ class Run:
             if err:  # recorded like a failed check
                 self.bad.setdefault(label, err[:500])
 
-    def window(self, passes) -> None:
-        """Whole passes, back to back, until ``--seconds`` have elapsed.
+    def pass_weights(self) -> dict[str, int]:
+        """How often one pass runs each op label."""
+        weights = dict.fromkeys(self.wl.queries, 1)
+        if self.wl.scoring:
+            weights["score"] = self.wl.scoring
+        return weights
 
-        A traced run alternates untraced and traced passes and ends on a
-        traced one, so both halves time the same multiset of ops.
+    def window(self, passes) -> None:
+        """Passes back to back until ``--seconds`` have elapsed.
+
+        An untraced run stops at the first op boundary
+        past ``--seconds`` once every op has run. A traced run
+        alternates untraced and traced passes and ends on a whole
+        traced one, so both halves time every op.
         """
         from layers import NULL_PROBE
 
-        lat, traced_lat, layer_recs, errors = [], [], [], []
+        lat, traced_lat = defaultdict(list), defaultdict(list)
+        layer_recs, errors = [], []
         ops_log = self.record["ops"] = []
+        labels = set(self.pass_weights())
+        seen: set[str] = set()
         attempted = 0
         start = time.perf_counter()
+
+        def over() -> bool:
+            return time.perf_counter() - start >= self.args.seconds and seen == labels
+
         for n, ops in enumerate(passes, 1):
             traced = self.tracer is not None and n % 2 == 0
             for label, run in ops:
                 attempted += 1
+                seen.add(label)
                 probe = self.tracer.probe() if traced else NULL_PROBE
                 if attempted == self.args.inject_failure:
                     run = injected_failure
+                st0 = steal_jiffies()
                 dt, err = run_op(run, probe)
-                ops_log.append([label, round(dt, 4), traced])
+                ops_log.append([label, round(dt, 4), traced, steal_jiffies() - st0])
                 if err:
                     errors.append(f"{label}: {err}"[:500])
                 else:
-                    (traced_lat if traced else lat).append(dt)
+                    (traced_lat if traced else lat)[label].append(dt)
                     if traced:
                         layer_recs.append(probe.layers())
-            if time.perf_counter() - start >= self.args.seconds and (traced or self.tracer is None):
+                if self.tracer is None and over():
+                    break
+            if over() and (self.tracer is None or traced):
                 break
-        self.elapsed = self.record["window_s"] = time.perf_counter() - start
+        self.record["window_s"] = time.perf_counter() - start
         self.attempted, self.errors = attempted, errors
         self.lat, self.traced_lat, self.layer_recs = lat, traced_lat, layer_recs
 
     # -- results ------------------------------------------------------
+    def median_pass(self, samples: dict[str, list[float]]) -> list[float]:
+        """Op latencies of a median pass: each op's median over its
+        repetitions, as often as one pass runs it. Ops that never
+        succeeded are left out; they count in success_rate."""
+        return [statistics.median(samples[label])
+                for label, n in self.pass_weights().items() if samples.get(label)
+                for _ in range(n)]
+
     def end_to_end(self) -> dict[str, float]:
         import numpy as np
 
-        lat = np.array(self.lat)
-        tail = float(np.percentile(lat, TAIL_PCT)) if len(lat) else float("nan")
-        self.record["op_s_tail"] = {"percentile": TAIL_PCT, "samples": len(lat),
-                                    "beyond": int((lat > tail).sum())}
+        lat = np.array(self.median_pass(self.lat))
         failed = len(self.errors)
+        self.record["samples_per_op"] = {k: len(v) for k, v in self.lat.items()}
         return {
             "setup_s": self.setup_s,
-            "ops_per_s": (self.attempted - failed) / self.elapsed,
+            "ops_per_s": len(lat) / lat.sum() if len(lat) else float("nan"),
             "op_s_p50": float(np.median(lat)) if len(lat) else float("nan"),
-            "op_s_tail": tail,
+            "op_s_tail": float(np.percentile(lat, TAIL_PCT)) if len(lat) else float("nan"),
             "fit_s": self.fit_s,
             "success_rate": (self.attempted - failed) / self.attempted,
             "peak_rss_mb": self.peak_rss_mb,
@@ -357,9 +397,10 @@ class Run:
         released = sum(r.get("pinning.released", 0) for r in recs)
         out["pinning.released_per_pin"] = released / created if created else 0.0
         out.update(self.fit_layers)
-        untraced, traced = sum(self.lat), sum(self.traced_lat)
-        out["trace.overhead"] = (
-            (len(self.traced_lat) / traced) / (len(self.lat) / untraced) if traced and untraced else float("nan"))
+        both = {k: v for k, v in self.lat.items() if self.traced_lat.get(k)}
+        untraced = sum(self.median_pass(both))
+        traced = sum(self.median_pass({k: self.traced_lat[k] for k in both}))
+        out["trace.overhead"] = untraced / traced if traced else float("nan")
         return out
 
     def execute(self) -> int:
@@ -379,10 +420,16 @@ class Run:
             if self.wl.scoring:
                 self.start_scoring(model)
             passes = self.passes()
-            self.warm(next(passes))
+            for _ in range(self.wl.warm_passes):
+                self.warm(next(passes))
             self.window(passes)
             jvm_mb, py_mb = peak_rss_mb(self.spark)
-            self.record["peak_rss_mb"] = {"jvm": jvm_mb, "python": py_mb}
+            mem = self.spark._jvm.java.lang.management.ManagementFactory.getMemoryMXBean()
+            self.record["peak_rss_mb"] = {
+                "jvm": jvm_mb, "python": py_mb,
+                "jvm_heap_committed": mem.getHeapMemoryUsage().getCommitted() / 2**20,
+                "jvm_nonheap_committed": mem.getNonHeapMemoryUsage().getCommitted() / 2**20,
+            }
             self.peak_rss_mb = jvm_mb + py_mb
             if self.tracer:
                 self.tracer.close()
@@ -396,12 +443,8 @@ class Run:
         self.record["attempted"], self.record["failed"] = self.attempted, failed
         self.record["error_rate"] = failed / self.attempted
         self.record["errors"] = self.errors
-        notes = {}
-        if "op_s_tail" in self.record:
-            t = self.record["op_s_tail"]
-            notes["op_s_tail"] = f" (p{t['percentile']:g} of {t['samples']} ok ops, {t['beyond']} beyond it)"
         for name, value in metrics.items():
-            print(f"{name} {value:.6g} {units[name]}{notes.get(name, '')}")
+            print(f"{name} {value:.6g} {units[name]}")
         print(f"error_rate {self.record['error_rate']:.6g} ratio ({failed} of {self.attempted} ops failed)")
         print("record " + json.dumps(self.record, default=float))
         correct = failed == 0 and not self.bad and not self.fit_error
